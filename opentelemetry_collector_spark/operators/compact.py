@@ -126,8 +126,8 @@ def compact_flat_dir(
     columns) into O(rows / max_records_per_file) bin-packed files — the
     ledger twin of compact_sinks.
 
-    Every ledger commit appends one tiny ``coalesce(1)`` file
-    (sources/incremental.py _commit, plans/checkpoint.py _commit), so a
+    Every append-ledger commit writes one tiny ``coalesce(1)`` file
+    (plans/ledger.py ``Ledger.append``; ``Ledger.compact`` calls this), so a
     long-lived deployment's bookmark scan opens one parquet footer per
     historical tick — after 10^5 ticks the metadata read dwarfs the data.
     The reference's persistent queue has the same maintenance need on its

@@ -15,14 +15,16 @@ persistent_storage.go:268-348's delete-after-OnProcessingFinished ordering).
 Protocol per tick (caller typically inside ``IncrementalSource.process_new``
 with the tick's ``PendingTick.tick_id``)::
 
-    fresh = deduper.dedup(new_docs)            # pure, repeatable
+    fresh = deduper.dedup(new_docs, tick_id)   # pure, repeatable
     ... write `fresh` to the accepted corpus (idempotent sink) ...
     deduper.commit(fresh, tick_id)             # fp ledger, tick-partitioned
 
-Crash anywhere before ``commit`` -> the re-run sees the SAME ledger state,
-recomputes the SAME ``fresh`` set, and the idempotent sink + tick-partition
-overwrite make the retry exactly-once. Commits are tick-partition dynamic
-overwrites, so a double-commit of one tick cannot duplicate fingerprints.
+All three ledgers here are tick ledgers of ``plans/ledger.py``, which owns
+the crash protocol: a crash before ``commit`` re-runs against the same
+ledger, a double commit of one tick replaces its partition, and a probe
+given the tick's id ignores that tick's own partition — so a retry after
+``commit`` but before the caller's bookmark recomputes the same accepted
+set instead of matching each doc against its own committed row.
 
 Scale: the ledger holds one 32-char md5 + doc_id per accepted doc — bytes
 per doc, not the doc. The anti-join shuffles only (fp) pairs hashed on fp;
@@ -36,6 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from opentelemetry_collector_spark.plans.ledger import Ledger
+
+# files per tick partition: bounds both the commit-path fan-in (never a
+# single-task funnel on a large tick) and the ledger's file count (read
+# amplification on every probe)
+_LEDGER_FILES = 8
 
 FP_SCHEMA = T.StructType(
     [
@@ -58,15 +67,11 @@ class IncrementalDeduper:
         self,
         spark: SparkSession,
         ledger_path: str,
-        ledger_write_partitions: int = 8,
         bloom_ledger_path: str | None = None,
     ):
         self.spark = spark
         self.ledger_path = ledger_path
-        # files per tick partition: bounds both the commit-path fan-in
-        # (never a single-task funnel on a large tick) and the ledger's
-        # file count (read amplification on every seen() scan)
-        self.ledger_write_partitions = ledger_write_partitions
+        self._ledger = Ledger(spark, ledger_path, FP_SCHEMA, _LEDGER_FILES)
         # optional constant-state prefilter: with a Bloom ledger, a probe
         # MISS is proof of novelty (no false negatives), so only the
         # maybe-seen subset pays the anti-join against the growing fp
@@ -82,21 +87,14 @@ class IncrementalDeduper:
             self._bloom = IncrementalBloom(spark, bloom_ledger_path)
 
     def seen(self) -> DataFrame:
-        """Accepted fingerprints (empty frame when no ledger yet —
-        explicit FS probe, same bootstrap rule as IncrementalSource)."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
+        """Accepted fingerprints (empty frame when no ledger yet)."""
+        return self._ledger.read()
 
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], FP_SCHEMA)
-        return self.spark.read.schema(FP_SCHEMA).parquet(self.ledger_path)
-
-    def dedup(self, docs: DataFrame) -> DataFrame:
+    def dedup(self, docs: DataFrame, tick_id: str | None = None) -> DataFrame:
         """The tick's accepted docs: in-batch dups collapsed to the min
         doc_id per content hash, then everything already in the ledger
-        anti-joined away. Pure — safe to recompute on a crash retry (the
-        ledger only changes at ``commit``)."""
+        (outside ``tick_id``'s own partition) anti-joined away. Pure —
+        safe to recompute on a crash retry."""
         from pyspark.sql.window import Window
 
         fps = fingerprint(docs)
@@ -106,10 +104,9 @@ class IncrementalDeduper:
             .filter(F.col("doc_id") == F.col("canonical_id"))
             .drop("canonical_id")
         )
+        seen = self._ledger.read_excluding(tick_id).select("fp")
         if self._bloom is None:
-            fresh = in_batch.join(
-                self.seen().select("fp"), "fp", "left_anti"
-            )
+            fresh = in_batch.join(seen, "fp", "left_anti")
         else:
             # bloom prefilter: misses are definitely new (no exact-ledger
             # work at all); only hits — true dups plus the bounded
@@ -120,9 +117,7 @@ class IncrementalDeduper:
                 .select("fp")
             )
             definitely_new = in_batch.join(hits, "fp", "left_anti")
-            checked = in_batch.join(hits, "fp").join(
-                self.seen().select("fp"), "fp", "left_anti"
-            )
+            checked = in_batch.join(hits, "fp").join(seen, "fp", "left_anti")
             fresh = definitely_new.unionByName(checked)
         return docs.join(fresh.select("doc_id"), "doc_id")
 
@@ -143,23 +138,13 @@ class IncrementalDeduper:
                 self._bloom.sketch(fingerprint(accepted).select("fp")),
                 tick_id,
             )
-        (
-            fingerprint(accepted)
-            .withColumn("tick_id", F.lit(tick_id))
-            .select("fp", "doc_id", "tick_id")
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
+        self._ledger.commit_tick(
+            fingerprint(accepted).select("fp", "doc_id"), tick_id
         )
 
     def metrics(self) -> dict:
-        """Ledger gauges (queue-gauge analog, queued_retry.go:209-223)."""
-        led = self.seen()
-        n = led.count()
-        ticks = led.select("tick_id").distinct().count()
-        return {"accepted_docs": n, "ticks": ticks}
+        """Ledger gauges: {accepted_docs, ticks}."""
+        return self._ledger.gauges()
 
 
 # --- cross-tick curation (streaming twin of corpus_curation) ------------------
@@ -200,27 +185,21 @@ class IncrementalCurator:
         spark: SparkSession,
         ledger_path: str,
         quality_min: float = 0.55,
-        ledger_write_partitions: int = 8,
     ):
         self.spark = spark
         self.ledger_path = ledger_path
         self.quality_min = quality_min
-        self.ledger_write_partitions = ledger_write_partitions
+        self._ledger = Ledger(
+            spark, ledger_path, CURATION_FP_SCHEMA, _LEDGER_FILES
+        )
 
     def seen(self) -> DataFrame:
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
+        return self._ledger.read()
 
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], CURATION_FP_SCHEMA)
-        return self.spark.read.schema(CURATION_FP_SCHEMA).parquet(
-            self.ledger_path
-        )
-
-    def curate(self, docs: DataFrame) -> DataFrame:
+    def curate(self, docs: DataFrame, tick_id: str | None = None) -> DataFrame:
         """The tick's accepted docs with corpus_curation's exact columns
-        (doc_id, quality_score, prefix_fp, pred_class). Pure — safe to
+        (doc_id, quality_score, prefix_fp, pred_class), probed against the
+        ledger outside ``tick_id``'s own partition. Pure — safe to
         recompute on a crash retry."""
         from pyspark.sql.window import Window
 
@@ -250,21 +229,16 @@ class IncrementalCurator:
             .filter(F.col("doc_id") == F.col("canonical_id"))
             .select("doc_id", "quality_score", "prefix_fp", "pred_class")
         )
-        return in_tick.join(
-            self.seen().select("prefix_fp"), "prefix_fp", "left_anti"
-        ).select("doc_id", "quality_score", "prefix_fp", "pred_class")
+        seen = self._ledger.read_excluding(tick_id).select("prefix_fp")
+        return in_tick.join(seen, "prefix_fp", "left_anti").select(
+            "doc_id", "quality_score", "prefix_fp", "pred_class"
+        )
 
     def commit(self, accepted: DataFrame, tick_id: str) -> None:
         """Record the tick's accepted fingerprints idempotently (dynamic
         tick-partition overwrite — a retried tick never duplicates)."""
-        (
-            accepted.select("prefix_fp", "doc_id")
-            .withColumn("tick_id", F.lit(tick_id))
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
+        self._ledger.commit_tick(
+            accepted.select("prefix_fp", "doc_id"), tick_id
         )
 
 
@@ -304,10 +278,10 @@ class IncrementalMinHashDeduper:
     ``dedup_minhash_p``'s cluster canonicals, applied at the corpus
     boundary).
 
-    Crash contract is the module protocol: ``dedup`` is pure given the
-    ledger, ``commit`` is a dynamic tick-partition overwrite, so crash
-    retries recompute the same accepted set and double commits cannot
-    duplicate signatures.
+    Crash contract is the tick-ledger protocol of ``plans/ledger.py``:
+    ``dedup`` is pure given the ledger, ``commit`` replaces the tick's
+    partition, so crash retries recompute the same accepted set and double
+    commits cannot duplicate signatures.
 
     Scale: ledger row = doc_id + {16} bigints (~150 B per accepted doc).
     The per-tick probe is an equality join on (band, key) — uniform md5
@@ -320,25 +294,19 @@ class IncrementalMinHashDeduper:
         self,
         spark: SparkSession,
         ledger_path: str,
-        ledger_write_partitions: int = 8,
     ):
         self.spark = spark
         self.ledger_path = ledger_path
-        self.ledger_write_partitions = ledger_write_partitions
+        self._ledger = Ledger(spark, ledger_path, SIG_SCHEMA, _LEDGER_FILES)
 
     def seen(self) -> DataFrame:
         """Accepted (doc_id, sig) rows; empty frame before first commit."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
+        return self._ledger.read()
 
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], SIG_SCHEMA)
-        return self.spark.read.schema(SIG_SCHEMA).parquet(self.ledger_path)
-
-    def dedup(self, docs: DataFrame) -> DataFrame:
+    def dedup(self, docs: DataFrame, tick_id: str | None = None) -> DataFrame:
         """The tick's accepted docs (near-dup-free within the batch AND
-        vs everything already accepted). Pure — safe to recompute."""
+        vs everything already accepted outside ``tick_id``'s own
+        partition). Pure — safe to recompute."""
         from opentelemetry_collector_spark.operators.dedup import (
             JACCARD_THRESHOLD,
             MINHASH_K,
@@ -360,7 +328,7 @@ class IncrementalMinHashDeduper:
         # (2) cross-tick: band-collision candidates vs the ledger,
         # verified by the signature-estimated Jaccard
         new_sigs = minhash_signatures(self.spark, "", docs=canon)
-        led = self.seen()
+        led = self._ledger.read_excluding(tick_id)
         cand = (
             bands_from_signatures(new_sigs)
             .join(
@@ -406,21 +374,13 @@ class IncrementalMinHashDeduper:
             minhash_signatures,
         )
 
-        (
-            minhash_signatures(self.spark, "", docs=accepted)
-            .withColumn("tick_id", F.lit(tick_id))
-            .select("doc_id", "sig", "tick_id")
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
+        self._ledger.commit_tick(
+            minhash_signatures(self.spark, "", docs=accepted).select(
+                "doc_id", "sig"
+            ),
+            tick_id,
         )
 
     def metrics(self) -> dict:
-        """Ledger gauges (queue-gauge analog)."""
-        led = self.seen()
-        return {
-            "accepted_docs": led.count(),
-            "ticks": led.select("tick_id").distinct().count(),
-        }
+        """Ledger gauges: {accepted_docs, ticks}."""
+        return self._ledger.gauges()

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators.textstats import _tokens
+from opentelemetry_collector_spark.plans.ledger import Ledger
 
 # Count-Min: D hash rows x W buckets; P(overestimate > 2N/W) < (1/2)^D-ish
 CMS_D = 4
@@ -325,11 +326,10 @@ HLL_LEDGER_SCHEMA = "j long, m_j int, tick_id string"
 class IncrementalSketcher:
     """Cross-tick HLL distinct counting for streams that arrive in
     batches: each tick computes its own {HLL_M} register maxima (pure —
-    safe to recompute on a crash retry) and commits them to a persistent
-    ledger partitioned by tick_id (dynamic overwrite, so a retried tick
-    never duplicates — the IncrementalDeduper/persistent-queue crash
-    protocol, persistent_storage.go:268-348 analog). The merged sketch is
-    the per-register MAX over every committed tick.
+    safe to recompute on a crash retry) and commits them to a tick ledger
+    (plans/ledger.py — one ``tick_id=`` partition per tick, replaced on a
+    retried commit, so a retried tick never duplicates). The merged sketch
+    is the per-register MAX over every committed tick.
 
     Register max is associative, commutative, and IDEMPOTENT — so not
     only do crash retries leave the estimate unchanged, re-delivered
@@ -339,8 +339,7 @@ class IncrementalSketcher:
     ingest pipeline.
 
     Scale: ledger size = {HLL_M} rows per tick; the merge aggregate and
-    estimate are constant work regardless of stream size or tick count
-    (compact the ledger with operators/compact.py when tick count grows).
+    estimate are constant work regardless of stream size or tick count.
     """
 
     def __init__(self, spark: SparkSession, ledger_path: str,
@@ -348,6 +347,7 @@ class IncrementalSketcher:
         self.spark = spark
         self.ledger_path = ledger_path
         self.key_col = key_col
+        self._ledger = Ledger(spark, ledger_path, HLL_LEDGER_SCHEMA)
 
     def sketch(self, df: DataFrame) -> DataFrame:
         """This tick's (j, m_j) registers. Pure."""
@@ -355,30 +355,15 @@ class IncrementalSketcher:
 
     def commit(self, regs: DataFrame, tick_id: str) -> None:
         """Record the tick's registers idempotently."""
-        (
-            regs.withColumn("tick_id", F.lit(tick_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
-        )
+        self._ledger.commit_tick(regs, tick_id)
 
     def merged_registers(self) -> DataFrame:
         """Per-register max over all committed ticks (all {HLL_M} rows;
         an empty ledger is the all-zero sketch)."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
         base = self.spark.range(HLL_M).select(
             F.col("id").cast("long").alias("j")
         )
-        if not list_data_files(self.spark, self.ledger_path):
-            return base.select("j", F.lit(0).cast("int").alias("m_j"))
-        led = self.spark.read.schema(HLL_LEDGER_SCHEMA).parquet(
-            self.ledger_path
-        )
+        led = self._ledger.read()
         return base.join(
             led.groupBy("j").agg(F.max("m_j").alias("mx")), "j", "left"
         ).select("j", F.coalesce("mx", F.lit(0)).cast("int").alias("m_j"))

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opentelemetry_collector_spark.plans.ledger import Ledger
 from opentelemetry_collector_spark.plans.retry import (
     RetryConfig,
     with_retry,
@@ -113,30 +114,21 @@ class CheckpointedRunner:
         self.spark = spark
         self.config = config
         self.retry = retry or RetryConfig()
+        self._ledger = Ledger(spark, config.ledger_path, CHECKPOINT_SCHEMA)
 
     # --- ledger -----------------------------------------------------------
 
     def committed_buckets(self) -> set[int]:
-        """Committed bucket ids from the ledger.
+        """Committed bucket ids from the ledger (none before the first
+        commit — plans/ledger.py's bootstrap rule).
 
         Raises if the ledger was written with a DIFFERENT n_buckets —
         resuming under a changed bucketing would silently mix two
-        incompatible partitionings. Only a genuinely-missing ledger path
-        means "fresh run"; any other read failure propagates (a transient
-        FS error must not erase resume state)."""
-        try:
-            ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-                self.config.ledger_path
-            )
-            rows = (
-                ledger.filter(F.col("status") == "committed")
-                .select("bucket", "n_buckets").distinct().collect()
-            )
-        except Exception as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return set()
-            raise
+        incompatible partitionings."""
+        rows = (
+            self._ledger.read().filter(F.col("status") == "committed")
+            .select("bucket", "n_buckets").distinct().collect()
+        )
         seen_nb = {r.n_buckets for r in rows}
         if seen_nb and seen_nb != {self.config.n_buckets}:
             raise ValueError(
@@ -147,18 +139,14 @@ class CheckpointedRunner:
         return {r.bucket for r in rows}
 
     def _commit(self, records: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [
-                (
-                    r["run_id"], self.config.n_buckets, r["bucket"],
-                    r["input_fingerprint"], r["n_input"],
-                    r["n_routed_ok"], r["n_dead_letter"], r["wall_ms"], "committed",
-                )
-                for r in records
-            ],
-            schema=CHECKPOINT_SCHEMA[:-1],
-        ).withColumn("committed_at", F.current_timestamp())
-        df.coalesce(1).write.mode("append").parquet(self.config.ledger_path)
+        self._ledger.append([
+            (
+                r["run_id"], self.config.n_buckets, r["bucket"],
+                r["input_fingerprint"], r["n_input"],
+                r["n_routed_ok"], r["n_dead_letter"], r["wall_ms"], "committed",
+            )
+            for r in records
+        ])
 
     # --- run --------------------------------------------------------------
 
@@ -287,10 +275,7 @@ class CheckpointedRunner:
         """The checkpoint ledger as a DataFrame (queue-depth / sent-counter
         gauges analog, queued_retry.go:209-223), with per-bucket throughput
         (the north-rule "checkpoints carrying lineage AND throughput")."""
-        ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-            self.config.ledger_path
-        )
-        return ledger.withColumn(
+        return self._ledger.read().withColumn(
             "rows_per_sec",
             F.round(
                 F.col("n_input") / (F.greatest(F.col("wall_ms"), F.lit(1)) / 1000.0),
@@ -298,19 +283,8 @@ class CheckpointedRunner:
             ),
         )
 
-    def compact_ledger(self, max_records_per_file: int = 1_000_000) -> dict:
-        """Merge the per-wave ledger appends (one coalesce(1) file per
-        _commit) into a handful of files; committed_buckets()/metrics()
-        read through unchanged. Crash-safe and re-runnable (rewrite-then-
-        swap, operators/compact.py). Run between runs, never concurrently
-        with one — the swap renames the live dir."""
-        from opentelemetry_collector_spark.operators.compact import (
-            compact_flat_dir,
-        )
-
-        return compact_flat_dir(
-            self.spark,
-            self.config.ledger_path,
-            schema=CHECKPOINT_SCHEMA,
-            max_records_per_file=max_records_per_file,
-        )
+    def compact_ledger(self) -> dict:
+        """Merge the per-wave ledger appends (one file per _commit) into a
+        handful of files; committed_buckets()/metrics() read through
+        unchanged. Run between runs, never concurrently with one."""
+        return self._ledger.compact()

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opentelemetry_collector_spark.plans.ledger import Ledger, list_data_files
+
 LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("file_path", T.StringType(), False),
@@ -50,27 +52,6 @@ LEDGER_SCHEMA = T.StructType(
 )
 
 
-def list_data_files(spark: SparkSession, path: str) -> dict[str, int]:
-    """{absolute file path: size} via the Hadoop FileSystem API — a metadata
-    listing, no data read."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    if not fs.exists(hpath):
-        return {}
-    out: dict[str, int] = {}
-    it = fs.listFiles(hpath, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):  # _SUCCESS, hidden/temp files
-            continue
-        out[p] = st.getLen()
-    return out
-
-
 @dataclass(frozen=True)
 class PendingTick:
     """Immutable snapshot of one tick's input: id + {file: size}."""
@@ -86,16 +67,10 @@ class IncrementalSource:
         self.spark = spark
         self.data_path = data_path
         self.ledger_path = ledger_path
+        self._ledger = Ledger(spark, ledger_path, LEDGER_SCHEMA)
 
     def processed_files(self) -> set[str]:
-        # explicit existence probe via the Hadoop FileSystem API (same
-        # channel list_data_files uses) — sniffing exception text was
-        # brittle across Spark versions/locales, and a missing ledger
-        # (fresh bootstrap) must be distinguishable from a transient FS
-        # error, which must NOT look like "nothing processed"
-        if not list_data_files(self.spark, self.ledger_path):
-            return set()
-        ledger = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
+        ledger = self._ledger.read()
         return {
             r.file_path
             for r in ledger.select("file_path").distinct().collect()
@@ -114,15 +89,10 @@ class IncrementalSource:
         errors: dict[str, str] | None = None,
     ) -> None:
         errors = errors or {}
-        df = self.spark.createDataFrame(
-            [
-                (p, sz, run_id, None if p in errors else n_rows,
-                 errors.get(p))
-                for p, sz in sorted(files.items())
-            ],
-            schema=LEDGER_SCHEMA[:-1],
-        ).withColumn("committed_at", F.current_timestamp())
-        df.coalesce(1).write.mode("append").parquet(self.ledger_path)
+        self._ledger.append([
+            (p, sz, run_id, None if p in errors else n_rows, errors.get(p))
+            for p, sz in sorted(files.items())
+        ])
 
     def pending(self) -> "PendingTick | None":
         """Snapshot of the CURRENT pending tick: the new-file set plus a
@@ -236,10 +206,7 @@ class IncrementalSource:
         the scrape unit, so files_committed vs files_failed plus the
         tick's row count). The checkpoint runner's metrics() is the
         queue-gauge twin of this scrape-counter surface."""
-        ledger = self.spark.read.schema(LEDGER_SCHEMA).parquet(
-            self.ledger_path
-        )
-        return ledger.groupBy("run_id").agg(
+        return self._ledger.read().groupBy("run_id").agg(
             F.count(F.when(F.col("error").isNull(), True)).alias(
                 "files_committed"
             ),
@@ -250,20 +217,10 @@ class IncrementalSource:
             F.max("committed_at").alias("committed_at"),
         )
 
-    def compact_ledger(self, max_records_per_file: int = 1_000_000) -> dict:
-        """Merge the per-tick ledger appends (one coalesce(1) file each)
-        into a handful of files — maintenance for long-lived deployments,
-        where the bookmark anti-join otherwise opens one parquet footer
-        per historical tick. Crash-safe and re-runnable (rewrite-then-swap,
-        operators/compact.py); call it from the same cron that ticks, any
-        time between ticks."""
-        from opentelemetry_collector_spark.operators.compact import (
-            compact_flat_dir,
-        )
-
-        return compact_flat_dir(
-            self.spark,
-            self.ledger_path,
-            schema=LEDGER_SCHEMA,
-            max_records_per_file=max_records_per_file,
-        )
+    def compact_ledger(self) -> dict:
+        """Merge the per-tick ledger appends (one file each) into a handful
+        of files — maintenance for long-lived deployments, where the
+        bookmark anti-join otherwise opens one parquet footer per
+        historical tick. Call it from the same cron that ticks, any time
+        between ticks."""
+        return self._ledger.compact()

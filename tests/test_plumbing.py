@@ -379,3 +379,34 @@ def test_stale_or_new_operators_lead_the_registry():
     assert not missing, (
         f"operators absent from {latest.name} outside the window: {missing}"
     )
+
+
+def test_ledger_format_lives_in_one_module():
+    """Every write-then-commit ledger goes through plans/ledger.py: no
+    other engine module writes a tick_id-partitioned ledger by dynamic
+    overwrite, compacts a ledger dir, or detects a missing path from
+    exception text."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "opentelemetry_collector_spark"
+    rules = {
+        "tick-partition overwrite": lambda src: (
+            re.search(r"partitionBy\(\s*[\"']tick_id[\"']", src)
+            and "partitionOverwriteMode" in src
+        ),
+        "compact_flat_dir call": lambda src: re.search(
+            r"(?<!def )\bcompact_flat_dir\(", src
+        ),
+        "exception-text path probe": lambda src: (
+            "PATH_NOT_FOUND" in src or "Path does not exist" in src
+        ),
+    }
+    offenders = [
+        (str(path.relative_to(pkg)), rule)
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "plans" / "ledger.py"
+        for rule, hit in rules.items()
+        if hit(path.read_text())
+    ]
+    assert not offenders, offenders
